@@ -2,8 +2,8 @@ package graft
 
 /** Plan-audit main (developer tool, also exercised ad hoc for BASELINE.md's
   * plan evidence):
-  *  - `ExplainCheck <indexDir> <buckets>`: pruning filters of the postings
-  *    scan (PartitionFilters / PushedFilters).
+  *  - `ExplainCheck <indexDir>`: pruning filters of the postings scan
+  *    (PartitionFilters / PushedFilters).
   *  - `ExplainCheck ops <sfDir>`: formatted plans of the ops whose physical
   *    shape the scale review cares about (no single-partition exchange in
   *    q_window_rank, no corpus-sized broadcast in q_dedup_ngram).
@@ -22,7 +22,8 @@ object ExplainCheck {
         plan.split("\n").foreach(l => println("[plan] " + l.take(200)))
       }
     } else {
-      val e = new graft.query.QueryEngine(spark, args(0), args(1).toInt)
+      val e = new graft.query.QueryEngine(spark, args(0),
+        MainCommon.indexBuckets(spark, args(0)))
       val plan = e.postingsFor(Seq("w00017", "w00342"))
         .queryExecution.executedPlan.toString
       plan.split("\n").filter(l => l.contains("PartitionFilters") ||

@@ -40,33 +40,16 @@ object MainCommon {
     }
     (opts.result(), flags.result())
   }
-  /** Bucket count for read/maintain CLIs: the index is self-describing
-    * (job.txt records the encode bucket count), so --buckets is only needed
-    * for indexes predating the field — and an explicit flag that contradicts
-    * the recorded count fails loudly instead of silently pruning postings
-    * scans to the wrong termBucket dirs (zero hits, no error).
+  /** Bucket count for read/maintain CLIs, from the job.txt of the newest
+    * published segment: the index is self-describing, so only a fresh
+    * BuildIndex takes --buckets. An older index layout is rejected here
+    * with a rebuild message (IndexLayout.publishedDescriptors).
     */
-  def resolveBuckets(spark: SparkSession, indexDir: String,
-      flag: Option[String]): Int = {
-    import graft.index.IndexLayout.DetectedBuckets
-    val detected = graft.index.IndexLayout.detectBuckets(spark, indexDir)
-    (flag.map(_.toInt), detected) match {
-      case (Some(f), Some(DetectedBuckets(d, true))) if f != d =>
-        throw new IllegalArgumentException(
-          s"--buckets $f contradicts the index's recorded bucket count $d " +
-            s"at $indexDir (omit --buckets; it is only needed for indexes " +
-            "that predate self-description)")
-      // dir-count detection is a LOWER bound (empty buckets leave no dir):
-      // a flag below it is provably wrong, a flag at-or-above it may be the
-      // exact count the heuristic undercounted — trust the operator there
-      case (Some(f), Some(DetectedBuckets(d, false))) if f < d =>
-        throw new IllegalArgumentException(
-          s"--buckets $f cannot be right: the index at $indexDir has $d " +
-            "termBucket= dirs (more buckets than the flag claims exist)")
-      case (Some(f), _)                          => f
-      case (None, Some(DetectedBuckets(d, _)))   => d
-      case (None, None)                          => 32
-    }
+  def indexBuckets(spark: SparkSession, indexDir: String): Int = {
+    import graft.index.IndexLayout
+    val segdirs = IndexLayout.current(spark, indexDir).getOrElse(
+      throw new IllegalStateException(s"no published index at $indexDir"))
+    IndexLayout.publishedDescriptors(spark, indexDir, segdirs).last.buckets
   }
 
   /** Pull every `key <value>` pair out of an arg list (repeatable options —
@@ -123,20 +106,13 @@ object BuildIndex {
     val spark = MainCommon.session("graft-build")
     import spark.implicits._
     // fresh build: the flag (or default) DEFINES the layout. --append
-    // continues the PUBLISHED index, so its recorded count wins and a
-    // mismatched flag is rejected (mixed-bucket generations silently lose
-    // hits). --resume is different: it REPLAYS the crashed job's own
-    // job.txt bucket count regardless of this conf (IndexBuilder.resume),
-    // and the crashed job may legitimately differ from the published index
-    // (a rebuild under a new count) — so the flag passes through unchecked
-    // and only backstops pre-field orphans with no recorded count.
-    val conf = IndexConf(numBuckets =
-      if (flags.contains("--append"))
-        MainCommon.resolveBuckets(spark, indexDir, opts.get("--buckets"))
-      else if (flags.contains("--resume"))
-        opts.get("--buckets").map(_.toInt).getOrElse(
-          MainCommon.resolveBuckets(spark, indexDir, None))
-      else opts.getOrElse("--buckets", "32").toInt)
+    // continues the PUBLISHED index: its recorded count is the default and
+    // IndexBuilder.append rejects a flag that contradicts it (mixed-bucket
+    // generations silently lose hits). --resume REPLAYS the crashed job's
+    // own job.txt bucket count regardless of this conf.
+    val conf = IndexConf(numBuckets = opts.get("--buckets").map(_.toInt)
+      .getOrElse(if (flags.contains("--append"))
+        MainCommon.indexBuckets(spark, indexDir) else 32))
     val docs = opts.get("--input") match {
       case Some(p) => spark.read.parquet(p).as[graft.corpus.WebDoc]
       case None =>
@@ -170,13 +146,13 @@ object Suggest {
     val indexDir = args(0)
     val input = args(1)
     val (opts, flags) = MainCommon.parseArgs(args.drop(2).toSeq,
-      valued = Set("--n", "--df", "--buckets"),
+      valued = Set("--n", "--df"),
       flagNames = Set("--collate", "--regex"))
     val n = opts.getOrElse("--n", "10").toInt
     val df = opts.getOrElse("--df", "text")
     val spark = MainCommon.session("graft-suggest")
-    val buckets = MainCommon.resolveBuckets(spark, indexDir, opts.get("--buckets"))
-    val engine = new QueryEngine(spark, indexDir, buckets)
+    val engine = new QueryEngine(spark, indexDir,
+      MainCommon.indexBuckets(spark, indexDir))
     if (flags.contains("--collate")) {
       // Solr spellcheck.collate: rewrite zero-hit exact terms of a FULL
       // query with their top suggestions; print only hit-bearing collations
@@ -221,8 +197,7 @@ object Mlt {
     val indexDir = args(0)
     val text = args(1)
     val (opts, _) = MainCommon.parseArgs(args.drop(2).toSeq,
-      valued = Set("--k", "--max-terms", "--min-tf", "--min-df", "--df",
-        "--buckets"),
+      valued = Set("--k", "--max-terms", "--min-tf", "--min-df", "--df"),
       flagNames = Set.empty)
     val k = opts.getOrElse("--k", "10").toInt
     val maxTerms = opts.getOrElse("--max-terms", "10").toInt
@@ -230,8 +205,8 @@ object Mlt {
     val minDf = opts.getOrElse("--min-df", "2").toLong
     val df = opts.getOrElse("--df", "text")
     val spark = MainCommon.session("graft-mlt")
-    val buckets = MainCommon.resolveBuckets(spark, indexDir, opts.get("--buckets"))
-    val engine = new QueryEngine(spark, indexDir, buckets)
+    val engine = new QueryEngine(spark, indexDir,
+      MainCommon.indexBuckets(spark, indexDir))
     val (terms, result) =
       engine.moreLikeThisWithTerms(text, k, maxTerms, minTf, minDf, df)
     println(s"[graft] mlt interestingTerms=${terms.mkString(",")}")
@@ -250,21 +225,19 @@ object Mlt {
 /** Maintenance main: fold tombstones/upsert victims and merge generations
   * (the background-merge work Solr does internally; here an explicit
   * spark-submit job an operator schedules).
-  *   runMain graft.Compact <indexDir> [--buckets B] [--tail]
+  *   runMain graft.Compact <indexDir> [--tail]
   * `--tail` = tiered merge of every generation except the largest (cheap,
   * keeps the base untouched); default = full merge (also folds the global
   * tombstones dir).
   */
 object Compact {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: Compact <indexDir> [--buckets B] [--tail]")
+    require(args.nonEmpty, "usage: Compact <indexDir> [--tail]")
     val indexDir = args(0)
-    val (opts, flags) = MainCommon.parseArgs(args.drop(1).toSeq,
-      valued = Set("--buckets"), flagNames = Set("--tail"))
+    val (_, flags) = MainCommon.parseArgs(args.drop(1).toSeq,
+      valued = Set.empty, flagNames = Set("--tail"))
     val spark = MainCommon.session("graft-compact")
-    import spark.implicits._
-    val conf = IndexConf(numBuckets =
-      MainCommon.resolveBuckets(spark, indexDir, opts.get("--buckets")))
+    val conf = IndexConf(numBuckets = MainCommon.indexBuckets(spark, indexDir))
     val before = graft.index.IndexLayout.current(spark, indexDir)
       .getOrElse(throw new IllegalStateException(s"no index at $indexDir"))
     if (flags.contains("--tail")) {
@@ -310,16 +283,14 @@ object Snapshot {
 
 /** Real-time get by url — the Solr `/get?id=` analog (reference:
   * indexdata.py:1529–1533) as a CLI surface.
-  *   runMain graft.Get <indexDir> <url> [--buckets B]
+  *   runMain graft.Get <indexDir> <url>
   */
 object Get {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: Get <indexDir> <url> [--buckets B]")
-    val (opts, _) = MainCommon.parseArgs(args.drop(2).toSeq,
-      valued = Set("--buckets"), flagNames = Set.empty)
+    require(args.length == 2, "usage: Get <indexDir> <url>")
     val spark = MainCommon.session("graft-get")
     val engine = new QueryEngine(spark, args(0),
-      MainCommon.resolveBuckets(spark, args(0), opts.get("--buckets")))
+      MainCommon.indexBuckets(spark, args(0)))
     val rows = engine.realtimeGet(args(1)).collect()
     if (rows.isEmpty) println(s"[graft] get url='${args(1)}' -> NOT FOUND")
     else {
@@ -335,12 +306,12 @@ object Get {
 /** Query an index: top-k BM25 search, optional facet counts over ALL
   * matches, optional delete of the hits (the reference's searchindex.py -d
   * flag, searchindex.py:141–150).
-  *   runMain graft.Search <indexDir> <query> [--k K] [--buckets B] [--delete]
+  *   runMain graft.Search <indexDir> <query> [--k K] [--delete]
   *     [--facet FIELD]
   */
 object Search {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: Search <indexDir> <query|*:*> [--k K] [--start N] [--fl f1,f2] [--buckets B] [--df text|title] [--qop OR|AND] [--qf field[^w],field[^w]] [--tie 0..1] [--fq query]* [--facet field]* [--facet-limit N] [--facet-mincount M] [--facet-prefix P] [--facet-sort count|index] [--facet-offset N] [--facet-query query]* [--facet-range start,end,gapSec] [--facet-range-num field,start,end,gap] [--pivot fieldA,fieldB] [--sort field:asc|desc] [--export outDir] [--stats field] [--stats-percentiles 50,90,99] [--stats-distinct] [--group field] [--group-limit N] [--group-ngroups] [--after score,docId] [--delete] [--delete-all] [--exhaustive] [--distributed] [--explain]")
+    require(args.length >= 2, "usage: Search <indexDir> <query|*:*> [--k K] [--start N] [--fl f1,f2] [--df text|title] [--qop OR|AND] [--qf field[^w],field[^w]] [--tie 0..1] [--fq query]* [--facet field]* [--facet-limit N] [--facet-mincount M] [--facet-prefix P] [--facet-sort count|index] [--facet-offset N] [--facet-query query]* [--facet-range start,end,gapSec] [--facet-range-num field,start,end,gap] [--pivot fieldA,fieldB] [--sort field:asc|desc] [--export outDir] [--stats field] [--stats-percentiles 50,90,99] [--stats-distinct] [--group field] [--group-limit N] [--group-ngroups] [--after score,docId] [--delete] [--delete-all] [--exhaustive] [--distributed] [--explain]")
     val indexDir = args(0)
     val query = args(1)
     // repeatable options first (Solr takes fq= / facet.query= any number of
@@ -351,7 +322,7 @@ object Search {
     // count job over the same match set (Solr prices them separately too)
     val (facetFields, rest) = MainCommon.extractRepeated(rest2, "--facet")
     val (opts, flags) = MainCommon.parseArgs(rest,
-      valued = Set("--k", "--buckets", "--df", "--facet-range",
+      valued = Set("--k", "--df", "--facet-range",
         "--pivot", "--sort", "--stats", "--group", "--after", "--qop",
         "--qf", "--tie",
         "--start", "--fl", "--facet-limit", "--facet-mincount",
@@ -416,7 +387,7 @@ object Search {
       "--start (offset paging) and --after (cursor paging) are mutually " +
         "exclusive — a cursor already encodes the page boundary")
     val spark = MainCommon.session("graft-search")
-    val buckets = MainCommon.resolveBuckets(spark, indexDir, opts.get("--buckets"))
+    val buckets = MainCommon.indexBuckets(spark, indexDir)
     // --distributed forces the windowed plan (driver fast path off) — the
     // 100×-relevant physical strategy, for plan/latency inspection. Without
     // it, the engine's own constructor default applies (ADVICE r4: a

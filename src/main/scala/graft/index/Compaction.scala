@@ -53,8 +53,7 @@ object Compaction {
 
   /** Per-generation doc counts from the single-row stats tables. Shared by
     * the auto-compaction policy and the CLI `--tail` selection so the two
-    * cannot drift. Column-pruned select("n"): generations written before
-    * the maxDocId column existed must not crash the policy.
+    * cannot drift.
     */
   def generationCounts(spark: SparkSession, indexDir: String,
       gens: Seq[String]): Seq[(String, Long)] = {
@@ -74,6 +73,8 @@ object Compaction {
       subsetOpt: Option[Seq[String]] = None): Unit = {
     import spark.implicits._
     val published = IndexLayout.current(spark, indexDir).getOrElse(return)
+    // refuse an older index layout before rewriting any of it
+    IndexLayout.publishedDescriptors(spark, indexDir, published)
     val gens = subsetOpt.getOrElse(published)
     require(gens.nonEmpty && gens.forall(published.contains),
       s"merge subset $gens not within published $published")

@@ -256,16 +256,18 @@ object IndexBuilder {
     val published = IndexLayout.current(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"append requires a published index at $indexDir"))
+    // the batch continues the PUBLISHED layout: a different bucket count
+    // would publish mixed-bucket generations that silently lose hits
+    val recorded =
+      IndexLayout.publishedDescriptors(spark, indexDir, published).last.buckets
+    require(conf.numBuckets == recorded,
+      s"--buckets ${conf.numBuckets} contradicts the index's recorded " +
+        s"bucket count $recorded at $indexDir (omit --buckets on --append)")
     // id offset from the single-row stats tables (r5): O(G) metadata reads
     // per batch instead of a max(docId) column scan over every generation —
     // the difference between O(1) and O(corpus) per streaming micro-batch.
-    // Stats written before r5 lack the high-water mark → fall back to the
-    // scan once (the next compaction/append rewrites stats with it).
-    val statsMax = IndexLayout.combinedStats(spark, indexDir).maxDocId
     val liveMax =
-      if (statsMax >= 0) statsMax
-      else spark.read.parquet(published.map(sd => s"$indexDir/$sd/docs"): _*)
-        .agg(max($"docId")).head().getLong(0)
+      IndexLayout.combinedStats(spark, indexDir, published).maxDocId
     // backstop: never reissue an id the tombstone view can mask. A partial
     // compaction whose merged subset was ENTIRELY dead drops those
     // generations' stats while folding their supersedes into the global
@@ -379,21 +381,23 @@ object IndexBuilder {
       case Some(sd) =>
         val segPath = s"$indexDir/$sd"
         val published = IndexLayout.current(spark, indexDir).getOrElse(Nil)
+        // refuse an older index layout before replaying anything onto it
+        IndexLayout.publishedDescriptors(spark, indexDir, published)
         val fs = new org.apache.hadoop.fs.Path(indexDir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val desc = IndexLayout.readJobDescriptor(spark, segPath) match {
           case Some(d) => d
           case None =>
-            // descriptor is the FIRST write into a segment dir: an absent
-            // or torn (empty/unparseable) job.txt means the crash landed
-            // inside dir creation — the orphan carries no recoverable
-            // intent. Drop it; if ANYTHING is published, leave it serving
-            // (ADVICE r3: assuming "fresh full build" here made resume
-            // itself replace a whole published index with just the batch
-            // docs). Only an index with no published generation at all may
-            // fall through to a fresh build.
-            if (published.contains(sd))
-              return BuildReport(0, 0, 0, 0, conf.numBuckets, 0)
+            // descriptor is the FIRST write into a segment dir and its
+            // format= line the last: an absent or torn job.txt means the
+            // crash landed inside dir creation — the orphan carries no
+            // recoverable intent (published segments passed the format
+            // check above, so this is never one of them). Drop it; if
+            // ANYTHING is published, leave it serving (ADVICE r3: assuming
+            // "fresh full build" here made resume itself replace a whole
+            // published index with just the batch docs). Only an index with
+            // no published generation at all may fall through to a fresh
+            // build.
             fs.delete(new org.apache.hadoop.fs.Path(segPath), true)
             if (published.nonEmpty)
               return BuildReport(0, 0, 0, 0, conf.numBuckets, 0)
@@ -408,21 +412,8 @@ object IndexBuilder {
         // resume must finish the job with the buckets it was STARTED with —
         // rebuilding the missing buckets under a different count would
         // produce a segment whose termBucket layout disagrees with its
-        // completed buckets (silent query misses). 0 = pre-field descriptor;
-        // fall back to the caller's conf — but the orphan's own completed
-        // buckets are a hard LOWER BOUND on the true count: finishing a
-        // 32-bucket orphan under --buckets 16 would publish a mixed
-        // mod-16/mod-32 layout that silently loses hits. Reject loudly,
-        // same policy as MainCommon.resolveBuckets.
-        val rconf =
-          if (desc.buckets > 0) conf.copy(numBuckets = desc.buckets)
-          else {
-            require(done.isEmpty || conf.numBuckets > done.max,
-              s"--buckets ${conf.numBuckets} contradicts orphan segment $sd: " +
-              s"its manifest records completed termBucket ${done.max} " +
-              s"(pre-field job.txt has no count; pass at least ${done.max + 1})")
-            conf
-          }
+        // completed buckets (silent query misses).
+        val rconf = conf.copy(numBuckets = desc.buckets)
         val missing = (0 until rconf.numBuckets).filterNot(done).toSet
 
         desc.kind match {
@@ -432,8 +423,8 @@ object IndexBuilder {
               // full merge, condemn EXACTLY the tombstone files the merge's
               // recorded snapshot folded (idempotent replay): deletes issued
               // between the crash and this resume are not in the snapshot
-              // and keep masking their targets — the pre-r5 whole-dir wipe
-              // here was a resurrection of exactly those deletes.
+              // and keep masking their targets — a whole-dir wipe here
+              // would resurrect exactly those deletes.
               if (desc.kind == "compaction")
                 IndexLayout.condemnFoldedTombstones(spark, indexDir, sd)
               IndexLayout.gcUnreferenced(spark, indexDir, rconf.gcGraceMs)
@@ -727,8 +718,8 @@ object IndexBuilder {
     val segCount = manifestRows.map(_.segCount).sum
     // exact distinct-term count for this generation: buckets partition the
     // term space, so the per-bucket distinct counts sum without overlap
-    // (the pre-r5 report put segCount here, overstating terms whenever a
-    // hot term was df-split into multiple segments)
+    // (segCount would overstate terms whenever a hot term is df-split
+    // into multiple segments)
     val termCount = manifestRows.map(_.termCount).sum
     val postingsCount = manifestRows.map(_.rowCount).sum
     unpersistSorted()

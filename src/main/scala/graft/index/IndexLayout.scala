@@ -322,24 +322,41 @@ object IndexLayout {
 
   // ----------------------------------------------------- job descriptors
 
+  /** Version of the on-disk index layout, stamped as the LAST line of every
+    * segment's job.txt. A published segment without the current stamp was
+    * written by an older layout and is rejected with a rebuild message (see
+    * [[publishedDescriptors]]) — no reader here carries compatibility code
+    * for past layouts. Bump it whenever the layout changes.
+    */
+  val FormatVersion = 1
+
+  private val JobKinds =
+    Set("build", "append", "compaction", "compaction-partial")
+
   /** Written into a segment dir BEFORE any data: what job is materializing
-    * it, which docId offset its buckets use, and which segment set the
-    * pointer must name when it completes. Resume REPLAYS this record instead
-    * of inferring intent from the published pointer (ADVICE r2: inference
-    * mis-published crashed rebuilds and crashed compactions).
+    * it, which docId offset its buckets use, which segment set the pointer
+    * must name when it completes, and the bucket count it encodes with.
+    * Resume REPLAYS this record instead of inferring intent from the
+    * published pointer (ADVICE r2: inference mis-published crashed rebuilds
+    * and crashed compactions). `format=` goes last, so its presence marks a
+    * complete descriptor.
     */
   def writeJobDescriptor(spark: SparkSession, segPath: String,
       d: JobDescriptor): Unit = {
     val fs = fsOf(spark, segPath)
     val out = fs.create(new Path(segPath, "job.txt"), true)
-    val bucketsLine = if (d.buckets > 0) s"buckets=${d.buckets}\n" else ""
     try out.write(
       (s"kind=${d.kind}\nidOffset=${d.idOffset}\n" +
-        s"publish=${d.publish.mkString(",")}\n" + bucketsLine)
+        s"publish=${d.publish.mkString(",")}\nbuckets=${d.buckets}\n" +
+        s"format=$FormatVersion\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
+  /** The segment's job descriptor; None when job.txt is absent, torn (it
+    * does not end with the current `format=` line) or has a field that
+    * fails to parse — all three leave no intent to replay.
+    */
   def readJobDescriptor(spark: SparkSession,
       segPath: String): Option[JobDescriptor] = {
     val fs = fsOf(spark, segPath)
@@ -349,50 +366,31 @@ object IndexLayout {
     val txt =
       try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
       finally in.close()
-    val kv = txt.split("\n").map(_.trim).filter(_.contains("="))
+    if (!txt.endsWith(s"\nformat=$FormatVersion\n")) return None
+    val kv = txt.split("\n")
       .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap
-    for (kind <- kv.get("kind"); off <- kv.get("idOffset")) yield
-      JobDescriptor(kind, off.toLong,
-        kv.getOrElse("publish", "").split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq,
-        kv.get("buckets").map(_.toInt).getOrElse(0))
+    try Some(JobDescriptor(kv("kind"), kv("idOffset").toLong,
+        kv("publish").split(",").filter(_.nonEmpty).toSeq,
+        kv("buckets").toInt))
+      .filter(d => JobKinds(d.kind) && d.buckets > 0)
+    catch { case _: NoSuchElementException | _: NumberFormatException => None }
   }
 
-  /** A bucket count detected from a live index: `recorded = true` when it
-    * came from a job.txt `buckets=` field (authoritative — reject a
-    * contradicting flag); `recorded = false` when it was inferred by
-    * counting `termBucket=` dirs (a LOWER BOUND only — exact iff every
-    * bucket is non-empty, so a flag above it may well be right and must
-    * not be rejected, while a flag below it is provably wrong).
+  /** Descriptors of PUBLISHED segments, in order — the format check every
+    * entry point that opens a published index runs (engine view build,
+    * append, resume, compaction, CLIs). A published segment without a
+    * current descriptor comes from an older index layout: fail loudly,
+    * naming it, rather than guess at what it holds.
     */
-  final case class DetectedBuckets(n: Int, recorded: Boolean)
-
-  /** The bucket count the live index was encoded with, from the newest
-    * published segment that recorded one (job.txt `buckets=`); falls back to
-    * counting `termBucket=` dirs for pre-field segments. None when nothing
-    * is published. CLIs use this so an operator never has to repeat
-    * --buckets at query/compact time, and a WRONG explicit flag can be
-    * rejected loudly instead of silently pruning postings scans to the
-    * wrong termBucket dirs.
-    */
-  def detectBuckets(spark: SparkSession,
-      indexDir: String): Option[DetectedBuckets] = {
-    val segdirs = current(spark, indexDir).getOrElse(return None)
-    val recorded = segdirs.reverseIterator
-      .flatMap(sd => readJobDescriptor(spark, s"$indexDir/$sd"))
-      .map(_.buckets).find(_ > 0)
-    recorded.map(DetectedBuckets(_, recorded = true)).orElse {
-      val fs = fsOf(spark, indexDir)
-      val counts = segdirs.flatMap { sd =>
-        val p = new Path(s"$indexDir/$sd/postings")
-        if (!fs.exists(p)) None
-        else Some(fs.listStatus(p)
-          .count(_.getPath.getName.startsWith("termBucket=")))
-      }.filter(_ > 0)
-      if (counts.isEmpty) None
-      else Some(DetectedBuckets(counts.max, recorded = false))
+  def publishedDescriptors(spark: SparkSession, indexDir: String,
+      segdirs: Seq[String]): Seq[JobDescriptor] =
+    segdirs.map { sd =>
+      readJobDescriptor(spark, s"$indexDir/$sd").getOrElse(
+        throw new IllegalStateException(
+          s"segment $sd of $indexDir has no job.txt of index format " +
+            s"$FormatVersion: it was written by an older graft; rebuild " +
+            "the index (BuildIndex)"))
     }
-  }
 
   /** All delete/supersede sources for a live segment set: the global
     * `tombstones/` dir (delete-by-id) plus each segment's `supersedes/`
@@ -434,8 +432,7 @@ object IndexLayout {
 
   /** Combined corpus stats across the live segment dirs: counts and token
     * totals add; avgdl is re-derived from the sums (NOT averaged); the
-    * docId high-water mark is the max over generations (-1 when any
-    * generation predates the column — callers needing it must fall back).
+    * docId high-water mark is the max over generations (-1 = no docs).
     */
   def combinedStats(spark: SparkSession, indexDir: String): CorpusStats =
     combinedStats(spark, indexDir, live(spark, indexDir))
@@ -450,20 +447,12 @@ object IndexLayout {
   def combinedStats(spark: SparkSession, indexDir: String,
       segdirs: Seq[String]): CorpusStats = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    val parts = segdirs.map(sd => s"$indexDir/$sd/stats").flatMap { p =>
-      val df = spark.read.parquet(p)
-      val withMax = // pre-r5 stats files lack maxDocId
-        if (df.columns.contains("maxDocId")) df
-        else df.withColumn("maxDocId", lit(-1L))
-      withMax.as[CorpusStats].collect()
-    }
+    val parts = segdirs.flatMap(sd =>
+      spark.read.parquet(s"$indexDir/$sd/stats").as[CorpusStats].collect())
     val n = parts.map(_.n).sum
     val tt = parts.map(_.totalTerms).sum
     val ttl = parts.map(_.titleTerms).sum
-    val maxId =
-      if (parts.isEmpty || parts.exists(_.maxDocId < 0)) -1L
-      else parts.map(_.maxDocId).max
+    val maxId = parts.map(_.maxDocId).foldLeft(-1L)(math.max)
     CorpusStats(n, if (n == 0) 0.0 else tt.toDouble / n, tt,
       if (n == 0) 0.0 else ttl.toDouble / n, ttl, maxId)
   }

@@ -80,8 +80,7 @@ final case class PostingSegment(
   * it from the single-row stats tables instead of scanning `max(docId)`
   * over every generation's docs column — a streaming micro-batch pays O(G)
   * metadata reads, not an O(corpus) column scan, to pick its id offset.
-  * -1 = empty/unknown (pre-r5 stats files lack the column; the append path
-  * falls back to the scan).
+  * -1 = no docs.
   */
 final case class CorpusStats(n: Long, avgdl: Double, totalTerms: Long,
     titleAvgdl: Double = 0.0, titleTerms: Long = 0L, maxDocId: Long = -1L)
@@ -109,15 +108,15 @@ final case class ManifestRow(
 final case class Tombstone(docId: Long)
 
 /** Segment-dir job record (see IndexLayout.writeJobDescriptor): kind is
-  * "build" | "append" | "compaction"; `publish` is the exact segment set the
-  * pointer must name when this job completes. `buckets` is the term-hash
-  * bucket count the segment was (or is being) encoded with — the index's
-  * self-description, so read paths never have to trust a CLI flag (a
-  * mismatched bucket count prunes to the WRONG termBucket dirs and silently
-  * returns misses). 0 = written before this field existed.
+  * "build" | "append" | "compaction" | "compaction-partial"; `publish` is
+  * the exact segment set the pointer must name when this job completes.
+  * `buckets` is the term-hash bucket count the segment was (or is being)
+  * encoded with — the index's self-description, so read paths never have to
+  * trust a CLI flag (a mismatched bucket count prunes to the WRONG
+  * termBucket dirs and silently returns misses).
   */
 final case class JobDescriptor(kind: String, idOffset: Long,
-    publish: Seq[String], buckets: Int = 0)
+    publish: Seq[String], buckets: Int)
 
 object IndexConf {
   val BlockSize = 128

@@ -37,11 +37,6 @@ object PostingCodec {
     */
   def slicePositions(seg: PostingSegment): Array[Array[Byte]] = {
     val out = new Array[Array[Byte]](seg.count)
-    if (seg.posVb.isEmpty) {
-      java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]],
-        Array.empty[Byte])
-      return out
-    }
     val tfs = VByte.decode(seg.tfsVb, seg.count)
     var p = 0
     var i = 0
@@ -59,24 +54,20 @@ object PostingCodec {
   }
 
   /** Encode from per-posting PRE-PACKED position byte runs (see
-    * [[packPositions]]); `posBytes(i)` may be empty for positions-free data.
+    * [[packPositions]]); every posting carries its positions.
     */
   def encodePacked(term: String, termBucket: Int, segment: Int,
       docIds: Array[Long], tfs: Array[Long], dls: Array[Long],
       posBytes: Array[Array[Byte]]): PostingSegment = {
     val count = docIds.length
     require(count > 0, s"empty segment for term '$term'")
-    // all-or-nothing positions invariant: the decode side attributes posVb
-    // runs to postings by tf-counted vbyte values, so a NON-empty stream
-    // that is missing runs for some postings would silently hand one
-    // posting's bytes to the next (wrong phrase matches). Positions-free
-    // segments must be empty-for-ALL (decode treats empty posVb as such).
-    locally {
-      val nRuns = posBytes.count(p => p != null && p.nonEmpty)
-      require(nRuns == 0 || nRuns == count,
-        s"term '$term': $nRuns of $count postings carry positions — " +
-          "mixed positioned/position-free input cannot be encoded")
-    }
+    // every posting carries positions: the decode side attributes posVb
+    // runs to postings by tf-counted vbyte values, so a stream missing runs
+    // for some postings would silently hand one posting's bytes to the next
+    // (wrong phrase matches)
+    require(posBytes.length == count &&
+      posBytes.forall(p => p != null && p.nonEmpty),
+      s"term '$term': every one of $count postings must carry positions")
     val bs = IndexConf.BlockSize
     val nBlocks = (count + bs - 1) / bs
 
@@ -108,8 +99,7 @@ object PostingCodec {
       prev = docIds(i)
       VByte.encodeTo(tfBuf, tfs(i))
       VByte.encodeTo(dlBuf, dls(i))
-      if (i < posBytes.length && posBytes(i) != null)
-        posBuf.addAll(posBytes(i))
+      posBuf.addAll(posBytes(i))
       if (tfs(i) > blockMaxTf(b)) blockMaxTf(b) = tfs(i)
       if (dls(i) < blockMinDl(b)) blockMinDl(b) = dls(i)
       blockLast(b) = docIds(i)
@@ -129,13 +119,6 @@ object PostingCodec {
       positions: Array[Array[Int]]): PostingSegment =
     encodePacked(term, termBucket, segment, docIds, tfs, dls,
       positions.map(packPositions))
-
-  /** Positions-free convenience overload (tests, compaction of legacy data). */
-  def encode(term: String, termBucket: Int, segment: Int,
-      docIds: Array[Long], tfs: Array[Long],
-      dls: Array[Long]): PostingSegment =
-    encodePacked(term, termBucket, segment, docIds, tfs, dls,
-      Array.empty[Array[Byte]])
 
   /** Cut the sub-segment of blocks overlapping the docId window [lo, hi) —
     * WITHOUT decoding anything but the first docId gap. The distributed
@@ -222,7 +205,7 @@ object PostingCodec {
       docBuf.toArray,
       cut(seg.tfsVb, seg.blockTfOff),
       cut(seg.dlsVb, seg.blockDlOff),
-      cut(seg.posVb, seg.blockPosOff), // empty posVb: offsets are all 0
+      cut(seg.posVb, seg.blockPosOff),
       java.util.Arrays.copyOfRange(seg.blockLastDocId, loB, hiB),
       java.util.Arrays.copyOfRange(seg.blockMaxTf, loB, hiB),
       java.util.Arrays.copyOfRange(seg.blockMinDl, loB, hiB),
@@ -238,16 +221,11 @@ object PostingCodec {
      VByte.decode(seg.tfsVb, seg.count),
      VByte.decode(seg.dlsVb, seg.count))
 
-  /** Decode every posting's positions (empty segment-level stream → all
-    * postings get empty arrays). Test/exhaustive-path helper; the WAND path
-    * decodes lazily per block via [[SegCursor.curPositions]].
+  /** Decode every posting's positions. Test/exhaustive-path helper; the
+    * WAND path decodes lazily per block via [[SegCursor.curPositions]].
     */
   def decodePositions(seg: PostingSegment): Array[Array[Int]] = {
     val out = new Array[Array[Int]](seg.count)
-    if (seg.posVb.isEmpty) {
-      java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], Array.empty[Int])
-      return out
-    }
     val tfs = VByte.decode(seg.tfsVb, seg.count)
     var p = 0
     var i = 0
@@ -297,9 +275,7 @@ final class SegCursor(val seg: PostingSegment, idfv: Double, avgdl: Double) {
     BM25.score(blockTfs(pos), blockDls(pos), avgdl, idfv)
   def curTf: Long = blockTfs(pos)
 
-  /** Within-doc token positions of the current posting (ascending). Empty if
-    * the segment has no positions stream.
-    */
+  /** Within-doc token positions of the current posting (ascending). */
   def curPositions: Array[Int] = {
     if (blockPos == null) decodeBlockPositions()
     blockPos(pos)
@@ -343,11 +319,6 @@ final class SegCursor(val seg: PostingSegment, idfv: Double, avgdl: Double) {
 
   private def decodeBlockPositions(): Unit = {
     val out = new Array[Array[Int]](blockLen)
-    if (seg.posVb.isEmpty) {
-      java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], Array.empty[Int])
-      blockPos = out
-      return
-    }
     var p = seg.blockPosOff(blockIdx)
     var i = 0
     while (i < blockLen) {

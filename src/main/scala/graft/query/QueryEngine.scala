@@ -115,18 +115,16 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val sd = IndexLayout.current(spark, indexDir)
       .getOrElse(throw new IllegalStateException(
         s"no published index at $indexDir"))
-    // Bucket-count safety net: a numBuckets that disagrees with what a live
-    // segment was encoded with prunes postings scans to the WRONG
-    // termBucket dirs — zero hits, no error. Segments record their count in
-    // job.txt (0 = predates the field); fail loudly here instead. Checked
-    // per view build, not per query (job.txt is a one-line driver-side read).
-    sd.foreach { s =>
-      IndexLayout.readJobDescriptor(spark, s"$indexDir/$s")
-        .map(_.buckets).filter(_ > 0).foreach { b =>
-          if (b != numBuckets) throw new IllegalArgumentException(
-            s"QueryEngine numBuckets=$numBuckets but segment $s of " +
-              s"$indexDir was encoded with $b buckets")
-        }
+    // Format and bucket-count safety net: an older index layout is rejected
+    // (rebuild), and a numBuckets that disagrees with what a live segment
+    // was encoded with would prune postings scans to the WRONG termBucket
+    // dirs — zero hits, no error; fail loudly here instead. Checked per
+    // view build, not per query (job.txt is a small driver-side read).
+    IndexLayout.publishedDescriptors(spark, indexDir, sd).zip(sd).foreach {
+      case (d, s) =>
+        if (d.buckets != numBuckets) throw new IllegalArgumentException(
+          s"QueryEngine numBuckets=$numBuckets but segment $s of " +
+            s"$indexDir was encoded with ${d.buckets} buckets")
     }
     new IndexView(sd, IndexLayout.combinedStats(spark, indexDir, sd),
       readDocs(sd), readPostings(sd))
@@ -831,11 +829,10 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
     // window length from the docId-SPACE extent, not the live-doc count:
     // after delete/compaction cycles maxDocId can exceed n, and sizing by n
-    // would fragment the space into more windows than intended (r5 — the
-    // high-water mark now rides in stats; -1 = pre-r5 stats, fall back to
-    // n). Cap so window-local filter bitmaps stay ≤ 8 MiB regardless of
-    // corpus size (also kills any 2^31-docId assumption).
-    val idSpace = math.max(n, v.stats.maxDocId + 1)
+    // would fragment the space into more windows than intended. Cap so
+    // window-local filter bitmaps stay ≤ 8 MiB regardless of corpus size
+    // (also kills any 2^31-docId assumption).
+    val idSpace = v.stats.maxDocId + 1
     val rangeLen = math.min(
       math.max(1L, (idSpace + parallelism - 1) / parallelism), 1L << 26)
 

@@ -26,6 +26,10 @@ class CodecSpec extends AnyFunSuite {
     Array.fill(tf) { val v = cur; cur += 1 + rng.nextInt(20); v }
   }
 
+  /** Positions 0 until tf for each posting (cursor tests that ignore them). */
+  private def seqPositions(tfs: Array[Long]): Array[Array[Int]] =
+    tfs.map(tf => Array.range(0, tf.toInt))
+
   test("VByte plain round-trip") {
     val rng = new Random(1)
     for (_ <- 1 to 200) {
@@ -95,16 +99,6 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
-  test("positions-free segments decode to empty position lists") {
-    val ids = Array(1L, 5L, 9L)
-    val seg = PostingCodec.encode("t", 0, 0, ids,
-      Array(2L, 1L, 3L), Array(10L, 10L, 10L))
-    assert(PostingCodec.decodePositions(seg).forall(_.isEmpty))
-    val cur = new SegCursor(seg, 1.0, 10.0)
-    cur.init()
-    assert(cur.curPositions.isEmpty)
-  }
-
   test("mixed positioned/position-free postings reject at encode") {
     // decode attributes posVb runs to postings by count — a non-empty
     // stream missing runs would misalign every later posting's positions
@@ -113,14 +107,20 @@ class CodecSpec extends AnyFunSuite {
         Array(2L, 1L, 3L), Array(10L, 10L, 10L),
         Array(Array(0, 4), Array.empty[Int], Array(1, 2, 3)))
     }
+    // positions-free input rejects too: every posting carries positions
+    intercept[IllegalArgumentException] {
+      PostingCodec.encodePacked("t", 0, 0, Array(1L), Array(1L), Array(10L),
+        Array.empty[Array[Byte]])
+    }
   }
 
   test("SegCursor advanceTo lands on first docId >= target (block skipping)") {
     val rng = new Random(4)
     for (_ <- 1 to 100) {
       val ids = sortedIds(rng, 1 + rng.nextInt(1000))
+      val tfs = ids.map(_ => 1L)
       val seg = PostingCodec.encode("t", 0, 0,
-        ids, ids.map(_ => 1L), ids.map(_ => 100L))
+        ids, tfs, ids.map(_ => 100L), seqPositions(tfs))
       for (_ <- 1 to 20) {
         val target = rng.nextLong(1L << 41)
         val cur = new SegCursor(seg, 1.0, 100.0)
@@ -155,7 +155,9 @@ class CodecSpec extends AnyFunSuite {
       val third = math.max(1, ids.length / 3)
       val parts = ids.grouped(third).toSeq.filter(_.nonEmpty)
       val segs = parts.zipWithIndex.map { case (p, i) =>
-        PostingCodec.encode("t", 0, i, p, p.map(_ => 1L), p.map(_ => 100L))
+        val tfs = p.map(_ => 1L)
+        PostingCodec.encode("t", 0, i, p, tfs, p.map(_ => 100L),
+          seqPositions(tfs))
       }
       val cur = new TermCursor("t", segs, 1.0, 100.0, 0L, Long.MaxValue)
       val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -224,15 +226,16 @@ class CodecSpec extends AnyFunSuite {
   test("sliceForWindow: non-overlap returns None, full overlap returns the original") {
     val ids = Array(100L, 200L, 300L)
     val seg = PostingCodec.encode("t", 0, 0, ids,
-      Array(1L, 1L, 1L), Array(10L, 10L, 10L))
+      Array(1L, 1L, 1L), Array(10L, 10L, 10L), seqPositions(Array(1L, 1L, 1L)))
     assert(PostingCodec.sliceForWindow(seg, 0L, 100L).isEmpty)
     assert(PostingCodec.sliceForWindow(seg, 301L, 500L).isEmpty)
     assert(PostingCodec.sliceForWindow(seg, 0L, 1000L).exists(_ eq seg))
     // a TermCursor over a slice scores identically to one over the original
     val rng = new Random(12)
     val bigIds = sortedIds(rng, 700).distinct.sorted
+    val bigTfs = bigIds.map(i => (i % 4) + 1)
     val big = PostingCodec.encode("t", 0, 0, bigIds,
-      bigIds.map(i => (i % 4) + 1), bigIds.map(_ => 120L))
+      bigTfs, bigIds.map(_ => 120L), seqPositions(bigTfs))
     val lo = bigIds(bigIds.length / 3)
     val hi = bigIds(2 * bigIds.length / 3)
     val slice = PostingCodec.sliceForWindow(big, lo, hi).get
@@ -249,8 +252,9 @@ class CodecSpec extends AnyFunSuite {
     val rng = new Random(6)
     for (_ <- 1 to 100) {
       val ids = sortedIds(rng, 1 + rng.nextInt(500)).distinct.sorted
+      val tfs = ids.map(_ => 1L)
       val seg = PostingCodec.encode("t", 0, 0,
-        ids, ids.map(_ => 1L), ids.map(_ => 100L))
+        ids, tfs, ids.map(_ => 100L), seqPositions(tfs))
       val lo = rng.nextLong(1L << 41)
       val hi = lo + rng.nextLong(1L << 40)
       val cur = new TermCursor("t", Seq(seg), 1.0, 100.0, lo, hi)

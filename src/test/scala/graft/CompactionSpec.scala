@@ -295,33 +295,6 @@ class CompactionSpec extends AnyFunSuite {
     assert(hit.length == 1 && hit.head.getAs[String]("url") == url)
   }
 
-  test("auto-compaction tolerates pre-r5 stats files without maxDocId") {
-    val dir = SparkTestSession.tempDir("graft-oldstats")
-    val conf = IndexConf(numBuckets = 4, autoCompactGenerations = 1)
-    IndexBuilder.build(spark, CorpusGen.generate(spark, 60L), dir,
-      conf.copy(autoCompactGenerations = 0))
-    // rewrite the base generation's stats in the pre-r5 schema (no maxDocId)
-    val gen = IndexLayout.current(spark, dir).get.head
-    val p = s"$dir/$gen/stats"
-    val old = spark.read.parquet(p)
-      .select("n", "avgdl", "totalTerms", "titleAvgdl", "titleTerms")
-      .collect().head
-    Seq((old.getLong(0), old.getDouble(1), old.getLong(2),
-        old.getDouble(3), old.getLong(4)))
-      .toDF("n", "avgdl", "totalTerms", "titleAvgdl", "titleTerms")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-    // append over the legacy index: the offset read falls back to the docs
-    // scan AND the auto-compaction policy's per-gen stats read must not
-    // resolve the missing column
-    IndexBuilder.append(spark,
-      CorpusGen.generate(spark, 15L, seed = 381L), dir, conf)
-    assert(IndexLayout.current(spark, dir).get.size == 1,
-      "G=1 policy should have merged down to one generation")
-    val engine = new QueryEngine(spark, dir, conf.numBuckets)
-    assert(engine.stats.n == 75L)
-    assert(IndexLayout.combinedStats(spark, dir).maxDocId == 74L)
-  }
-
   test("queries racing appends never crash or see torn state") {
     // hammer the ONE-volatile-IndexView contract: refreshIfStale swaps the
     // whole snapshot, so a query thread racing an append's pointer flip

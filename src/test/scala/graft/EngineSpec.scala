@@ -1304,47 +1304,67 @@ class EngineSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   test("index self-describes its bucket count; a mismatched engine fails loudly") {
-    assert(IndexLayout.detectBuckets(spark, indexDir)
-      .contains(IndexLayout.DetectedBuckets(conf.numBuckets, recorded = true)))
+    assert(MainCommon.indexBuckets(spark, indexDir) == conf.numBuckets)
     // wrong numBuckets used to prune postings scans to the wrong termBucket
     // dirs — zero hits, no error; now the view build rejects it
     val e = intercept[IllegalArgumentException] {
       new QueryEngine(spark, indexDir, conf.numBuckets * 2)
     }
     assert(e.getMessage.contains("encoded with"))
-  }
 
-  test("dir-count bucket detection is a lower bound: flags at-or-above pass") {
-    // pre-self-description indexes (no job.txt buckets=) fall back to
-    // counting termBucket= dirs — a LOWER bound, since an empty bucket
-    // leaves no dir. The CLI resolver must reject only a flag BELOW the
-    // observed count (provably wrong) and trust one at-or-above it; the
-    // old equality check rejected the operator's CORRECT count and its
-    // "omit --buckets" advice then silently mis-pruned every scan.
-    val dir = SparkTestSession.tempDir("graft-lowerbound")
-    val c = graft.index.IndexConf(numBuckets = 8)
-    graft.index.IndexBuilder.build(spark, CorpusGen.generate(spark, 30L), dir, c)
+    // every writer stamps the bucket count and, LAST, the format version
+    val dir = SparkTestSession.tempDir("graft-format")
+    val c = IndexConf(numBuckets = 4, autoCompactGenerations = 0)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // strip the recorded count, fabricating a pre-field index...
-    val job = new org.apache.hadoop.fs.Path(s"$dir/seg-000000/job.txt")
-    val txt = { val in = fs.open(job)
-      try new String(in.readAllBytes()) finally in.close() }
-    val out = fs.create(job, true)
-    try out.write(txt.linesIterator.filterNot(_.startsWith("buckets="))
-      .mkString("\n").getBytes("UTF-8")) finally out.close()
-    // ...with one empty bucket (undercount: 7 dirs, true count 8)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$dir/seg-000000/postings/termBucket=7"), true)
-    assert(IndexLayout.detectBuckets(spark, dir)
-      .contains(IndexLayout.DetectedBuckets(7, recorded = false)))
-    assert(MainCommon.resolveBuckets(spark, dir, Some("8")) == 8,
-      "the true count must not be rejected on an undercounting fallback")
-    assert(MainCommon.resolveBuckets(spark, dir, None) == 7)
-    val e = intercept[IllegalArgumentException] {
-      MainCommon.resolveBuckets(spark, dir, Some("4"))
+    def jobPath(sd: String) = new org.apache.hadoop.fs.Path(s"$dir/$sd/job.txt")
+    def jobLines(sd: String): Seq[String] = {
+      val in = fs.open(jobPath(sd))
+      try new String(in.readAllBytes(), UTF_8).split("\n").toSeq
+      finally in.close()
     }
-    assert(e.getMessage.contains("termBucket"))
+    def assertStamped(kind: String): Unit = {
+      val l = jobLines(IndexLayout.current(spark, dir).get.last)
+      assert(l.head == s"kind=$kind", l)
+      assert(l.contains(s"buckets=${c.numBuckets}"), l)
+      assert(l.last == s"format=${IndexLayout.FormatVersion}", l)
+    }
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 40L), dir, c)
+    assertStamped("build")
+    IndexBuilder.append(spark, CorpusGen.generate(spark, 10L, seed = 611L),
+      dir, c)
+    assertStamped("append")
+    IndexBuilder.append(spark, CorpusGen.generate(spark, 10L, seed = 612L),
+      dir, c)
+    Compaction.merge(spark, dir, c, IndexLayout.current(spark, dir).get.tail)
+    assertStamped("compaction-partial")
+    Compaction.run(spark, dir, c)
+    assertStamped("compaction")
+
+    // --append continues the published layout: a contradicting count rejects
+    val batch = CorpusGen.generate(spark, 5L, seed = 613L)
+    val ea = intercept[IllegalArgumentException] {
+      IndexBuilder.append(spark, batch, dir, c.copy(numBuckets = 8))
+    }
+    assert(ea.getMessage.contains("contradicts"))
+
+    // an index whose job.txt has the old shape (no format= line) is refused
+    // with a rebuild message at every entry point — never read by guessing
+    val sd = IndexLayout.current(spark, dir).get.last
+    val old = jobLines(sd).filterNot(_.startsWith("format="))
+    val out = fs.create(jobPath(sd), true)
+    try out.write(old.map(_ + "\n").mkString.getBytes(UTF_8))
+    finally out.close()
+    def assertRejects(what: String)(f: => Any): Unit = {
+      val ex = intercept[IllegalStateException](f)
+      assert(ex.getMessage.contains("rebuild") && ex.getMessage.contains(sd),
+        s"$what: ${ex.getMessage}")
+    }
+    assertRejects("engine")(new QueryEngine(spark, dir, c.numBuckets))
+    assertRejects("append")(IndexBuilder.append(spark, batch, dir, c))
+    assertRejects("resume")(IndexBuilder.resume(spark, batch, dir, c))
+    assertRejects("compaction")(Compaction.run(spark, dir, c))
+    assertRejects("CLI resolver")(MainCommon.indexBuckets(spark, dir))
   }
 
   test("`+` is honored on ANY operand of an AND chain (ADVICE r3)") {

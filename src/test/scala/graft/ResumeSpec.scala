@@ -286,28 +286,44 @@ class ResumeSpec extends AnyFunSuite {
       "resume over a flip-complete compaction must GC unreferenced dirs")
   }
 
-  test("pre-field orphan: --buckets below a completed bucket rejects loudly") {
-    // job.txt written before the buckets= field existed (buckets=0): resume
-    // falls back to the caller's count — but the orphan's own manifest is a
-    // hard LOWER BOUND. Finishing a 6-bucket orphan under --buckets 2 would
-    // publish a mixed mod-2/mod-6 termBucket layout (silent query misses).
-    val dir = SparkTestSession.tempDir("graft-resume-prefield")
+  test("a truncated job.txt at any prefix is a torn orphan: resume drops it") {
+    // format= is the descriptor's LAST line, so a crash mid-write leaves a
+    // file without it — which must never be replayed as a real job: a cut
+    // `idOffset=` has no number, `kind=compac` is no kind, and `buckets=3`
+    // cut from `buckets=32` is the wrong count
+    import graft.query.QueryEngine
+    val dir = SparkTestSession.tempDir("graft-resume-torn")
+    val c = IndexConf(numBuckets = 4)
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 80), dir, c)
+    IndexBuilder.append(spark,
+      CorpusGen.generate(spark, 20, seed = 505L), dir, c)
+    val published = IndexLayout.current(spark, dir).get
+    val eng = new QueryEngine(spark, dir, c.numBuckets)
+    def results() = eng.search("the w00017 title:doc", 10).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val before = results()
+    assert(before.nonEmpty, "degenerate fixture: query has no hits")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val orphan = IndexLayout.segDirName(0)
-    fs.mkdirs(new Path(s"$dir/$orphan"))
+    val orphan = IndexLayout.nextSegDir(spark, dir)
+    // the real descriptor an append of this orphan would write
     IndexLayout.writeJobDescriptor(spark, s"$dir/$orphan",
-      JobDescriptor("build", 0L, Seq(orphan), buckets = 0))
-    Seq(ManifestRow(5, "a", "z", 1L, 1L, 1L, 1L, Array.empty[String], 0L,
-      "complete")).toDS().coalesce(1).write.parquet(s"$dir/$orphan/manifest")
-    val docs = CorpusGen.generate(spark, 30)
-    val err = intercept[IllegalArgumentException] {
-      IndexBuilder.resume(spark, docs, dir, IndexConf(numBuckets = 2))
+      JobDescriptor("append", 100L, published :+ orphan, c.numBuckets))
+    val job = new Path(s"$dir/$orphan/job.txt")
+    val full = { val in = fs.open(job)
+      try in.readAllBytes() finally in.close() }
+    assert(IndexLayout.readJobDescriptor(spark, s"$dir/$orphan").nonEmpty)
+    val batch = CorpusGen.generate(spark, 10, seed = 506L)
+    (0 until full.length).foreach { len =>
+      fs.mkdirs(new Path(s"$dir/$orphan"))
+      val out = fs.create(job, true)
+      try out.write(full, 0, len) finally out.close()
+      val r = IndexBuilder.resume(spark, batch, dir, c)
+      assert(r.docs == 0, s"prefix $len: resume must not build the orphan")
+      assert(!fs.exists(new Path(s"$dir/$orphan")),
+        s"prefix $len: torn orphan must be dropped")
+      assert(IndexLayout.current(spark, dir).get == published,
+        s"prefix $len: published pointer must be untouched")
+      assert(results() == before, s"prefix $len: query results changed")
     }
-    assert(err.getMessage.contains("contradicts orphan segment"))
-    // a count above the recorded maximum passes the gate and finishes the job
-    val r = IndexBuilder.resume(spark, docs, dir, IndexConf(numBuckets = 6))
-    assert(r.buckets == 6)
-    assert(IndexLayout.current(spark, dir).get == Seq(orphan),
-      "resume must publish the orphan's own recorded publish set")
   }
 }
